@@ -264,12 +264,21 @@ def _png_bytes(w, h):
     )
 
 
-def _jpeg_bytes(w, h, with_app0=True):
+def _jpeg_bytes(w, h, with_app0=True, with_tables=False):
     import struct
 
     out = b"\xff\xd8"
     if with_app0:  # a skippable APP0 segment before the frame
         out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
+    if with_tables:
+        # DQT then DHT before SOF0, the order real encoders write; the
+        # quant table holds 0xFF/0xC0 bytes, so only a length-skipping
+        # walk (not a byte scan for a SOF marker) finds the real frame
+        dqt = b"\x00" + bytes([0xFF, 0xC0, 0x00, 0x11] + [16] * 60)
+        out += b"\xff\xdb" + struct.pack(">H", 2 + len(dqt)) + dqt
+        counts = [0, 1, 5, 1, 1, 1, 1, 1, 1] + [0] * 7
+        dht = b"\x00" + bytes(counts) + bytes(range(sum(counts)))
+        out += b"\xff\xc4" + struct.pack(">H", 2 + len(dht)) + dht
     out += b"\xff\xc0" + struct.pack(">HBHH", 17, 8, h, w) + b"\x00" * 10
     return out
 
@@ -288,6 +297,18 @@ def test_parse_media_header_real_decoders():
     }
     assert parse_media_header(_jpeg_bytes(1024, 768)) == {
         "media_type": "image/jpeg", "width": 1024, "height": 768,
+    }
+    # DQT/DHT tables before the frame, non-square: width and height
+    # come from their own SOF0 fields, not from table bytes or each other
+    assert parse_media_header(_jpeg_bytes(34, 21, with_tables=True)) == {
+        "media_type": "image/jpeg", "width": 34, "height": 21,
+    }
+    # 0xFF fill bytes and the length-less TEM marker may precede a segment
+    padded = _jpeg_bytes(34, 21, with_tables=True)
+    padded = padded[:2] + b"\xff\xff\xff\x01\xff\xff" + padded[2:]
+    assert parse_media_header(padded)["width"] == 34
+    assert parse_media_header(_png_bytes(34, 21)) == {
+        "media_type": "image/png", "width": 34, "height": 21,
     }
     # SOF2 (progressive) also carries dimensions
     prog = _jpeg_bytes(33, 44).replace(b"\xff\xc0", b"\xff\xc2")
@@ -643,13 +664,14 @@ def test_media_frames_and_features_edges(spark):
     assert feats[1]["printable_ratio"] == 1.0
     assert feats[3]["n_bytes"] == 0 and feats[3]["byte_entropy"] == 0.0
     meta = spark.createDataFrame(
-        [(1, 1024, 512), (2, 100, 50), (3, 512, 1024)],
+        [(1, 1024, 512), (2, 100, 50), (3, 512, 1024), (4, 1024, 5)],
         "doc_id long, width int, height int",
     )
     plan = {r["doc_id"]: r for r in resize_plan(meta, max_side=512).collect()}
     assert (plan[1]["target_width"], plan[1]["target_height"]) == (512, 256)
     assert (plan[2]["target_width"], plan[2]["target_height"]) == (100, 50)  # no upscale
     assert (plan[3]["target_width"], plan[3]["target_height"]) == (256, 512)
+    assert (plan[4]["target_width"], plan[4]["target_height"]) == (512, 3)  # 2.5 rounds half-up
 
 
 def test_score_pairs_memo_not_shared_across_namespaced_sides(spark):

@@ -3,6 +3,7 @@ logistic stand-in lacks, deterministic fits, and Catalyst-expr inference
 identical to the numpy path."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from whoiswho_spark.operators.gbdt import (
@@ -45,6 +46,19 @@ def test_gbdt_deterministic_fit(spark):
     m1 = fit_gbdt(df, ["f0", "f1"], n_trees=10)
     m2 = fit_gbdt(df, ["f0", "f1"], n_trees=10)
     assert m1 == m2
+
+
+@pytest.mark.parametrize("null_col", ["f1", "label"])
+def test_gbdt_refuses_null_feature_or_label(spark, null_col):
+    """A NULL in the fit sample must raise, naming the column — not turn
+    into NaN and train on NaN gradients."""
+    rows = [(float(i), float(i % 3), float(i % 2)) for i in range(40)]
+    df = spark.createDataFrame(rows, "f0 double, f1 double, label double")
+    df = df.withColumn(
+        null_col, F.when(F.col("f0") == 7.0, F.lit(None)).otherwise(F.col(null_col))
+    )
+    with pytest.raises(ValueError, match=repr(null_col)):
+        fit_gbdt(df, ["f0", "f1"], n_trees=2)
 
 
 def test_gbdt_catalyst_equals_numpy_and_udf(spark):

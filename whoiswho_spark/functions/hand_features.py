@@ -27,15 +27,10 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType
 
 from whoiswho_spark.functions.similarity import get_jaro_distance
-
-FIELD_DEFAULT_IDF = {"org": 14.37, "venue": 10.42, "title": 14.79, "keywords": 1.0}
 
 _NONWORD = re.compile(r"[\W_]")
 
@@ -186,22 +181,6 @@ def coauthor_matcher_features(
     ]
 
 
-def field_features_udf_factory(idf: dict[str, float], default_idf: float):
-    """pandas UDF: (attr_a STRING, attrs_b ARRAY<STRING>) → ARRAY<DOUBLE>[8].
-    ``idf`` rides the closure → broadcast once per executor."""
-
-    @pandas_udf(ArrayType(DoubleType()))
-    def field_features_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                other_features(x, list(y) if y is not None else [], idf, default_idf)
-                for x, y in zip(a, b)
-            ]
-        )
-
-    return field_features_udf
-
-
 def build_idf_table(
     df: DataFrame, tokens_col: str = "tokens", min_df: int = 1
 ) -> DataFrame:
@@ -219,19 +198,4 @@ def build_idf_table(
             "token",
             F.round(F.log(F.lit(float(n_docs)) / F.col("df")), 6).alias("idf"),
         )
-    )
-
-
-def idf_weighted_overlap_col(
-    toks_a, toks_b, idf_map_col
-) -> "F.Column":
-    """Catalyst-only idf-weighted overlap (distinct-token form): sum of
-    idf over the token intersection, given a MAP<STRING,DOUBLE> column
-    (from a broadcast idf table). Used when the full 8-vector isn't
-    needed — stays in codegen."""
-    inter = F.array_intersect(toks_a, toks_b)
-    return F.aggregate(
-        inter,
-        F.lit(0.0),
-        lambda acc, t: acc + F.coalesce(idf_map_col[t], F.lit(1.0)),
     )

@@ -17,16 +17,9 @@ from __future__ import annotations
 import re
 import unicodedata
 
-import pandas as pd
-from pyspark.sql import functions as F  # noqa: F401  (re-exported surface)
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
-
 from whoiswho_spark.constants import NAMES_WRONG
 from whoiswho_spark.functions.pinyin import has_han, lazy_pinyin, pinyin_get
 from whoiswho_spark.functions.translit import ascii_fold
-
-_NON_ALPHA = re.compile(r"[^a-z]+")
 
 
 def unify_name_order(name: str) -> tuple[str, str]:
@@ -176,13 +169,3 @@ def match_name(name: str, target_name: str) -> bool:
             if re.match(f"{tokens[1]}.*{tokens[0]}.*", first_name):
                 return True
     return False
-
-
-@pandas_udf(ArrayType(StringType()))
-def unify_name_order_udf(names: pd.Series) -> pd.Series:
-    return names.map(lambda n: list(unify_name_order(n or "_")))
-
-
-@pandas_udf(StringType())
-def cleaning_name_udf(names: pd.Series) -> pd.Series:
-    return names.map(cleaning_name)

@@ -160,10 +160,3 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     the API surface; the loop is over one Arrow batch, like the reference's
     numpy batch loops in model.py:218-227)."""
     return html.map(ref_extract_text)
-
-
-@pandas_udf(StringType())
-def norm_text_udf(s: pd.Series) -> pd.Series:
-    """Arrow-batched ``ref_norm_text`` — the byte-exact fallback for fields
-    where Java/Python regex semantics could diverge (exotic whitespace)."""
-    return s.map(ref_norm_text)

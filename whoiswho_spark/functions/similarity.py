@@ -45,11 +45,6 @@ def tanimoto_col(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
-def jaccard_col(a: Column, b: Column) -> Column:
-    """Alias of tanimoto_col — on sets the two coincide (SURVEY.md §2.5)."""
-    return tanimoto_col(a, b)
-
-
 def dot_col(a: Column, b: Column) -> Column:
     """Dot product of two ARRAY<FLOAT/DOUBLE> columns, pure Catalyst."""
     return F.aggregate(
@@ -164,8 +159,7 @@ def _char_ngrams(s: str, n: int = 3) -> list[str]:
 @pandas_udf(DoubleType())
 def ngram_cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     """char-3gram TF cosine per pair (the north-star 'char-3gram TF-IDF
-    cosine'; IDF weighting is applied upstream by joining token_idf and is
-    also available via tfidf3_cosine_udf_factory)."""
+    cosine'; IDF weighting is applied upstream by joining token_idf)."""
     out = np.zeros(len(a))
     for i, (x, y) in enumerate(zip(a.fillna(""), b.fillna(""))):
         ga, gb = _char_ngrams(x), _char_ngrams(y)
@@ -182,33 +176,6 @@ def ngram_cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
         nb = np.sqrt(sum(v * v for v in cb.values()))
         out[i] = dot / (na * nb) if na and nb else 0.0
     return pd.Series(out)
-
-
-def tfidf3_cosine_udf_factory(idf: dict[str, float], default_idf: float = 1.0):
-    """IDF-weighted 3-gram cosine; ``idf`` is broadcast into the UDF closure
-    (the analog of the reference's idf dicts, feature_process.py:34-43 with
-    field defaults at :338-344)."""
-
-    @pandas_udf(DoubleType())
-    def tfidf3_cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        out = np.zeros(len(a))
-        for i, (x, y) in enumerate(zip(a.fillna(""), b.fillna(""))):
-            ga, gb = _char_ngrams(x), _char_ngrams(y)
-            if not ga or not gb:
-                continue
-            wa: dict[str, float] = {}
-            for g in ga:
-                wa[g] = wa.get(g, 0.0) + idf.get(g, default_idf)
-            wb: dict[str, float] = {}
-            for g in gb:
-                wb[g] = wb.get(g, 0.0) + idf.get(g, default_idf)
-            dot = sum(v * wb.get(k, 0.0) for k, v in wa.items())
-            na = np.sqrt(sum(v * v for v in wa.values()))
-            nb = np.sqrt(sum(v * v for v in wb.values()))
-            out[i] = dot / (na * nb) if na and nb else 0.0
-        return pd.Series(out)
-
-    return tfidf3_cosine_udf
 
 
 # KNRM kernel family (model.py:103-135): mu spans [-1,1] in 0.05 steps plus
@@ -247,15 +214,3 @@ def knrm_udf(emb_a: pd.Series, emb_b: pd.Series) -> pd.Series:
         mb /= np.maximum(np.linalg.norm(mb, axis=1, keepdims=True), 1e-12)
         out.append(knrm_pool(ma @ mb.T).tolist())
     return pd.Series(out)
-
-
-@pandas_udf(DoubleType())
-def cosine_pairs_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Vectorized cosine over a whole Arrow batch of embedding pairs —
-    one matmul per batch, the fast path for wide embeddings where the
-    Catalyst aggregate expr would walk arrays element-wise."""
-    ma = np.asarray([np.asarray(v, dtype=np.float64) for v in a])
-    mb = np.asarray([np.asarray(v, dtype=np.float64) for v in b])
-    na = np.maximum(np.linalg.norm(ma, axis=1), 1e-12)
-    nb = np.maximum(np.linalg.norm(mb, axis=1), 1e-12)
-    return pd.Series((ma * mb).sum(axis=1) / (na * nb))

@@ -23,7 +23,6 @@ from collections import deque
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def dbscan_precomputed(D: np.ndarray, eps: float, min_samples: int) -> np.ndarray:
@@ -91,16 +90,4 @@ def cluster_blocks_dbscan(
         blocks_payload.select("block_key", id_col, emb_col)
         .groupBy("block_key")
         .applyInPandas(_cluster, schema=f"block_key string, {id_col} string, label bigint")
-    )
-
-
-def dbscan_clusters_to_ids(labels: DataFrame, id_col: str = "url") -> DataFrame:
-    """(block_key, url, label) → (url, cluster_id STRING): globally unique
-    cluster ids = block_key#label; -1 rows become singleton clusters keyed
-    by their own id (the pre-post_match outlier state)."""
-    return labels.select(
-        F.col(id_col),
-        F.when(F.col("label") >= 0, F.concat_ws("#", "block_key", "label"))
-        .otherwise(F.col(id_col))
-        .alias("cluster_id"),
     )

@@ -223,26 +223,6 @@ def minhash_dup_pairs(
     return out
 
 
-def _jaccard_sets_udf():
-    """Arrow-batched token-set Jaccard — Python set ops per batch beat
-    the interpreted Catalyst array HOFs ~1.5× at sf0.1 and sidestep
-    their JVM allocation pressure (see scoring._all_features_udf note)."""
-    import pandas as pd
-    import numpy as np
-    from pyspark.sql.types import DoubleType
-
-    def jac(x, y):
-        out = np.zeros(len(x))
-        for i in range(len(x)):
-            sa, sb = set(x.iat[i]), set(y.iat[i])
-            u = len(sa | sb)
-            out[i] = len(sa & sb) / u if u else 0.0
-        return pd.Series(out)
-
-    jac.__annotations__ = {"x": pd.Series, "y": pd.Series, "return": pd.Series}
-    return pandas_udf(jac, DoubleType())
-
-
 def _jaccard_sets_memo_udf():
     """Token-set Jaccard over DUPLICATE-FREE token arrays — now a pure
     Catalyst expression builder (same 4-arg call shape as the pandas
@@ -256,15 +236,14 @@ def _jaccard_sets_memo_udf():
     with ``|∪| = |a|+|b|−|∩|`` keeps the whole stage in whole-stage
     codegen: no ArrowEvalPython node, no Python workers, no per-pair
     set materialization.  Bit-identical doubles to the pandas memo
-    kernel (verified 0/259,529 mismatches at sf0.1, 0/25,984,882 at
-    sf1): identical integer counts, same single int/int→double division.
+    kernel it replaced (verified 0/259,529 mismatches at sf0.1,
+    0/25,984,882 at sf1): identical integer counts, same single
+    int/int→double division.  That measured-and-rejected kernel is
+    recorded in OPTIMIZATION_r06.md.
 
     PRECONDITION: both array inputs carry no duplicates — every call
     site (bench.py's er pairs, ngram_jaccard_pairs) applies
-    ``array_distinct`` first, so ``size(x)`` equals ``|set(x)|``.  The
-    per-batch id→set memo variant is kept below
-    (``_jaccard_sets_memo_pandas_udf``) as the measured-and-rejected
-    alternative; see OPTIMIZATION_r06.md."""
+    ``array_distinct`` first, so ``size(x)`` equals ``|set(x)|``."""
 
     def jac(ida, x, idb, y):
         # coalesce(try_divide(i, |a|+|b|−i), 0) with i =
@@ -279,58 +258,13 @@ def _jaccard_sets_memo_udf():
         # returns NULL exactly when the union is 0 (both inputs empty
         # or NULL) → coalesce restores the contract's 0.0; bit-parity
         # vs the let form checked at 0 mismatches over all 26.3M
-        # stand-in pairs (bench_extra jacvar).
+        # stand-in pairs (OPTIMIZATION_r06.md, Finding 7).
         i = F.size(F.array_intersect(x, y))
         return F.coalesce(
             F.try_divide(i, F.size(x) + F.size(y) - i), F.lit(0.0)
         )
 
     return jac
-
-
-def _jaccard_sets_memo_pandas_udf():
-    """Token-set Jaccard with a PER-BATCH id→set memo: every page
-    appears in many pairs, so each set is built once per Arrow batch
-    instead of once per pair. No explicit re-sort needed — pair batches
-    arrive clustered already (block-key join output groups a block's
-    pairs; payload-join output repeats the join-key side), and an
-    explicit sortWithinPartitions of the WIDE pair rows was measured
-    slower than the memo savings. |∪| = |a|+|b|−|∩| (no union-set
-    allocation). Bit-identical doubles to _jaccard_sets_udf: same
-    integer counts, same one division.
-
-    Round 6 retired this from the hot paths: the pairs-side Arrow
-    transfer (two string arrays per pair) made it 300.7 s of
-    er_pipeline's 358.7 s at sf1 — the Catalyst builder above replaces
-    it (parity-gated in tests/test_dedup_ann_textstats.py)."""
-    import pandas as pd
-    import numpy as np
-    from pyspark.sql.types import DoubleType
-
-    def jac(ida, x, idb, y):
-        memo: dict = {}
-        out = np.zeros(len(x))
-
-        def get(i, arr):
-            s = memo.get(i)
-            if s is None:
-                s = set(arr)
-                memo[i] = s
-            return s
-
-        for i in range(len(x)):
-            sa = get(ida.iat[i], x.iat[i])
-            sb = get(idb.iat[i], y.iat[i])
-            inter = len(sa & sb)
-            u = len(sa) + len(sb) - inter
-            out[i] = inter / u if u else 0.0
-        return pd.Series(out)
-
-    jac.__annotations__ = {
-        "ida": pd.Series, "x": pd.Series,
-        "idb": pd.Series, "y": pd.Series, "return": pd.Series,
-    }
-    return pandas_udf(jac, DoubleType())
 
 
 def ngram_jaccard_pairs(
@@ -443,7 +377,7 @@ def _dense_token_ranks(
     return ranks, acc
 
 
-def _pair_distinct(pairs: DataFrame, keys: tuple[str, ...] = ("id_a", "id_b")) -> DataFrame:
+def _pair_distinct(pairs: DataFrame) -> DataFrame:
     """Distinct over (id_a, id_b) with the exchange placed EXPLICITLY
     below the aggregate (round 6, guide §2.1/§5).
 
@@ -459,7 +393,7 @@ def _pair_distinct(pairs: DataFrame, keys: tuple[str, ...] = ("id_a", "id_b")) -
     pairs): 83.3 s → 42.0 s for the candidate stage.  Result-identical
     trivially (dedup is dedup; partition count only shapes execution)."""
     n = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return pairs.repartition(n, *keys).distinct()
+    return pairs.repartition(n, "id_a", "id_b").distinct()
 
 
 def ngram_jaccard_pairs_prefix(
@@ -605,7 +539,7 @@ def ngram_jaccard_pairs_prefix(
         #   same row. The 500M-row meet output then never crosses an
         #   Exchange at all. Measured at the sf1 stand-in (interleaved
         #   best-of-2): 23.0 s → 5.7 s, result identical over all 44M
-        #   candidate pairs (bench_extra ngramv3).
+        #   candidate pairs (OPTIMIZATION_r06.md, Finding 6).
         pmask = F.expr(
             "aggregate(slice(rks, 1, _pl), cast(0 as bigint), "
             "(acc, r) -> acc | shiftleft(cast(1 as bigint), cast(r as int)))"

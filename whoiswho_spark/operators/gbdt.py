@@ -156,6 +156,11 @@ def fit_gbdt(
     # Arrow path lands the same rows columnar; the fit is row-order-
     # invariant (docstring above), so the model artifact is identical.
     pdf = deterministic_fit_sample(pairs, cols, sample_n, sample_seed).toPandas()
+    # to_numpy(dtype=float) turns a NULL into NaN, which would train on
+    # NaN gradients without a word — refuse it here instead
+    for c in cols:
+        if pdf[c].isna().any():
+            raise ValueError(f"fit_gbdt: column {c!r} has null or NaN values")
     X = pdf[list(feature_cols)].to_numpy(dtype=float)
     y = pdf[label_col].to_numpy(dtype=float)
     return fit_gbdt_numpy(

@@ -3,14 +3,6 @@
 The decode stage is a REAL, dependency-free container-header parser —
 PNG (IHDR), JPEG (SOF-family marker scan), GIF (logical screen
 descriptor) — so width/height/media-type extraction needs no PIL/ffmpeg.
-Pixel-level work is REAL for all three containers — PNG
-(operators/png_codec.py: stdlib-zlib decoder), GIF (operators/
-gif_codec.py: pure-Python LZW), and baseline 4:4:4 JPEG (operators/
-jpeg_codec.py: numpy Huffman-DCT) — dispatched in the image_pixel_stats
-mapInPandas stage with no codec libraries. Out-of-scope shapes
-(progressive/subsampled JPEG, interlace-free limits documented per
-module) are refused loudly; the Spark-side contract (schema, Arrow
-batch shape, partitioning) is identical with or without system codecs.
 """
 
 from __future__ import annotations
@@ -146,66 +138,6 @@ def synthetic_media_payload_col(kind_col, width_col, height_col):
     )
 
 
-def image_pixel_stats(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
-    """REAL pixel statistics for every container — PNG (png_codec:
-    stdlib zlib + unfilters), GIF (gif_codec: pure-Python LZW), and
-    baseline 4:4:4 JPEG (jpeg_codec: numpy Huffman-DCT) — dispatched by
-    signature inside one mapInPandas stage. Emits (doc_id, media_type,
-    width, height, channels, px_mean, px_std, px_min, px_max); malformed
-    or out-of-scope payloads (e.g. progressive/subsampled JPEG) yield no
-    row, so an anti-join against parse_media_header audits exactly what
-    was skipped."""
-    from whoiswho_spark.operators.gif_codec import decode_gif
-    from whoiswho_spark.operators.jpeg_codec import decode_jpeg
-    from whoiswho_spark.operators.png_codec import decode_png
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "media_type", "width", "height", "channels",
-                "px_mean", "px_std", "px_min", "px_max",
-            )}
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    if raw.startswith(_PNG_SIG):
-                        arr, mt = decode_png(raw), "image/png"
-                    elif raw[:6] in (b"GIF87a", b"GIF89a"):
-                        arr, mt = decode_gif(raw), "image/gif"
-                    elif raw[:2] == b"\xff\xd8":
-                        arr, mt = decode_jpeg(raw), "image/jpeg"
-                    else:
-                        continue
-                except ValueError:
-                    continue
-                h, w, ch = arr.shape
-                out["doc_id"].append(int(did))
-                out["media_type"].append(mt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["channels"].append(ch)
-                out["px_mean"].append(round(float(arr.mean()), 6))
-                out["px_std"].append(round(float(arr.std()), 6))
-                out["px_min"].append(int(arr.min()))
-                out["px_max"].append(int(arr.max()))
-            yield pd.DataFrame(out)
-
-    return df.select(
-        F.col(id_col).cast("long").alias(id_col), payload_col
-    ).mapInPandas(
-        stats,
-        schema=(
-            "doc_id bigint, media_type string, width int, height int, "
-            "channels int, px_mean double, px_std double, px_min int, "
-            "px_max int"
-        ),
-    )
-
-
 def media_byte_features(
     df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -291,7 +223,7 @@ def sample_frames(
 
 
 def resize_plan(meta: DataFrame, max_side: int = 512) -> DataFrame:
-    """Metadata-level resize planning (the stage BEFORE pixel decode):
+    """Metadata-level resize planning (no pixel decode):
     aspect-preserving target dims capped at ``max_side``. Pure Catalyst
     integer math — floor(dim*scale + 0.5) on both engines (portable
     half-up without relying on engine round() semantics). Upscaling
@@ -305,99 +237,4 @@ def resize_plan(meta: DataFrame, max_side: int = 512) -> DataFrame:
         "height",
         F.floor(w * scale + F.lit(0.5)).cast("int").alias("target_width"),
         F.floor(h * scale + F.lit(0.5)).cast("int").alias("target_height"),
-    )
-
-
-def resize_images(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    max_side: int = 512,
-    method: str = "bilinear",
-) -> DataFrame:
-    """REAL pixel resize — the execution of ``resize_plan``: decode any
-    supported container (PNG/GIF/baseline-JPEG via the real codecs),
-    resample to the plan's aspect-preserving target (same half-up dim
-    formula, upscale never), and re-encode as PNG (the lossless output
-    container). ``method``: 'nearest' (index sampling) or 'bilinear'
-    (separable, edge-clamped; numpy, vectorized per image). Emits
-    (doc_id, media_type src, width, height, payload PNG BINARY);
-    undecodable payloads yield no row (audit via parse_media_header)."""
-    import numpy as np
-
-    from whoiswho_spark.operators.gif_codec import decode_gif
-    from whoiswho_spark.operators.jpeg_codec import decode_jpeg
-    from whoiswho_spark.operators.png_codec import encode_png, decode_png
-
-    if method not in ("nearest", "bilinear"):
-        raise ValueError(f"resize_images: unknown method {method}")
-
-    def _target(w: int, h: int) -> tuple[int, int]:
-        scale = min(1.0, float(max_side) / max(w, h))
-        return int(w * scale + 0.5), int(h * scale + 0.5)
-
-    def _resize(arr: "np.ndarray", tw: int, th: int) -> "np.ndarray":
-        h, w = arr.shape[:2]
-        if (tw, th) == (w, h):
-            return arr
-        if method == "nearest":
-            # PIL-style half-open sampling: source center of target px
-            ys = np.minimum(((np.arange(th) + 0.5) * h / th).astype(int), h - 1)
-            xs = np.minimum(((np.arange(tw) + 0.5) * w / tw).astype(int), w - 1)
-            return arr[ys][:, xs]
-        # bilinear, edge-clamped, align-corners=False convention
-        fy = (np.arange(th) + 0.5) * h / th - 0.5
-        fx = (np.arange(tw) + 0.5) * w / tw - 0.5
-        y0 = np.clip(np.floor(fy).astype(int), 0, h - 1)
-        x0 = np.clip(np.floor(fx).astype(int), 0, w - 1)
-        y1 = np.minimum(y0 + 1, h - 1)
-        x1 = np.minimum(x0 + 1, w - 1)
-        wy = np.clip(fy - y0, 0.0, 1.0)[:, None, None]
-        wx = np.clip(fx - x0, 0.0, 1.0)[None, :, None]
-        a = arr.astype(np.float64)
-        top = a[y0][:, x0] * (1 - wx) + a[y0][:, x1] * wx
-        bot = a[y1][:, x0] * (1 - wx) + a[y1][:, x1] * wx
-        out = top * (1 - wy) + bot * wy
-        return np.clip(np.round(out), 0, 255).astype(np.uint8)
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "media_type", "width", "height", "payload")}
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    if raw.startswith(_PNG_SIG):
-                        arr, mt = decode_png(raw), "image/png"
-                    elif raw[:6] in (b"GIF87a", b"GIF89a"):
-                        arr, mt = decode_gif(raw), "image/gif"
-                    elif raw[:2] == b"\xff\xd8":
-                        arr, mt = decode_jpeg(raw), "image/jpeg"
-                    else:
-                        continue
-                except ValueError:
-                    continue
-                if arr.dtype == np.uint16:
-                    # 16-bit PNG: exact spec downsample to the 8-bit
-                    # output container (round(v * 255 / 65535))
-                    arr = np.round(
-                        arr.astype(np.float64) * (255.0 / 65535.0)
-                    ).astype(np.uint8)
-                h, w = arr.shape[:2]
-                tw, th = _target(w, h)
-                res = _resize(arr, tw, th)
-                out["doc_id"].append(int(did))
-                out["media_type"].append(mt)
-                out["width"].append(tw)
-                out["height"].append(th)
-                out["payload"].append(encode_png(res))
-            yield pd.DataFrame(out)
-
-    return df.select(
-        F.col(id_col).cast("long").alias(id_col), payload_col
-    ).mapInPandas(
-        work,
-        schema=(
-            "doc_id bigint, media_type string, width int, height int, "
-            "payload binary"
-        ),
     )

@@ -260,15 +260,6 @@ def score_pairs(
     return out.withColumn("score", _score_expr())
 
 
-PAIR_PAYLOAD_COLS = [
-    "url",
-    "title",
-    "title_tokens",
-    "text_tokens",
-    "embedding",
-]
-
-
 # ---------------------------------------------------------------------------
 # Learned calibrated scorer (the GBDT-ensemble *scoring semantics* of
 # ClassficationModels.py:41-331 — a calibrated pair probability in [0,1] —

@@ -22,25 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TESTDATA_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_catalog(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All driver testdata tables, also registered as temp views so
-    spark.sql(...) works against the same names DuckDB oracles use."""
-    out = {}
-    for t in TESTDATA_TABLES:
-        df = read_table(spark, sf_dir, t)
-        df.createOrReplaceTempView(t)
-        out[t] = df
-    return out
 
 
 def read_json(spark: SparkSession, path: str, schema: str | None = None,
